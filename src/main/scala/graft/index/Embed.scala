@@ -29,13 +29,6 @@ object Embed {
       zip_with(acc, transform(vocabArr, w => when(t === w, 1.0).otherwise(0.0)), (a, b) => a + b))
   }
 
-  /** Hashing-TF vector of dimension `dim` using Spark's murmur3 `hash`. */
-  def hashingTf(text: Column, dim: Int): Column = {
-    val toks = tokens(text)
-    val buckets = transform(toks, t => pmod(hash(t), lit(dim)))
-    array((0 until dim).map(i => size(filter(buckets, b => b === i)).cast("double")): _*)
-  }
-
   /** L2-normalize an array<double> vector (null-safe; zero vector stays 0). */
   def l2Normalize(vec: Column): Column = {
     val norm = sqrt(norm2(vec))

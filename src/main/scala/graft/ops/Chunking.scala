@@ -4,12 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Chunk-boundary scan and rollups (SURVEY.md §2.5 W4/W6, §2.4 A6/A7,
+/** Chunk-boundary scan and rollups (SURVEY.md §2.5 W4, §2.4 A6/A7,
   * §2.8 F13/F19).
   *
   *  - W4 boundary scan: ref `backend/services/chunking.py:216-298` — break on
   *    section change / overflow / marker, then running group id.
-  *  - W6 running budget: ref `backend/services/rag.py:276-299`.
   *  - F13 chunk fingerprint: ref `backend/services/chunking.py:401-415`.
   *
   * Two W4 variants are provided: the window-function approximation (pure
@@ -18,15 +17,6 @@ import org.apache.spark.sql.functions._
   * state never spans a document).
   */
 object Chunking {
-
-  /** W6/P11: keep rows while the running sum of `cost` (inclusive) stays
-    * within `budget`, per partition in `orderCol` order. */
-  def withinBudget(df: DataFrame, partCols: Seq[Column], orderCol: Column, cost: Column,
-                   budget: Long, out: String = "in_budget"): DataFrame = {
-    val w = Window.partitionBy(partCols: _*).orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn(out, sum(cost).over(w) <= budget)
-  }
 
   /** W4 (windowed approximation): chunk id = floor(cumulative-length /
     * maxChars) plus explicit break flags folded in via gaps-and-islands. */

@@ -30,12 +30,8 @@ object Pii {
   // space-separated groups redact only their longest spaceless span.
   val PhonePattern = "\\+?\\d[\\d().-]{6,}\\d"
 
-  /** Count matches of each PII class (on the UNredacted text). */
+  /** Count email matches (on the UNredacted text). */
   def countEmails(text: Column): Column = size(regexp_extract_all(text, lit(EmailPattern), lit(0)))
-  def countIpv4(text: Column): Column = size(regexp_extract_all(text, lit(Ipv4Pattern), lit(0)))
-  def countPhones(text: Column): Column =
-    size(regexp_extract_all(regexp_replace(regexp_replace(text, EmailPattern, "<EMAIL>"),
-      Ipv4Pattern, "<IP>"), lit(PhonePattern), lit(0)))
 
   /** Replace every email/IPv4/phone with a typed placeholder token. */
   def redact(text: Column): Column = {

@@ -80,15 +80,6 @@ object TableOps {
       .otherwise("other_table")
   }
 
-  /** A2: numeric column aggregate over exploded rows — parse cell `colIdx`
-    * as a number and aggregate per table. Trust gate applied by caller. */
-  def computeFromTable(df: DataFrame, tableId: Column, rows: Column, colIdx: Int): DataFrame =
-    df.select(tableId.as("table_id"), explode(rows).as("r"))
-      .select(col("table_id"), Cleaning.parseMoney(element_at(col("r"), colIdx + 1)).as("v"))
-      .filter(col("v").isNotNull)
-      .groupBy("table_id")
-      .agg(sum("v").as("sum_v"), avg("v").as("avg_v"), max("v").as("max_v"), count(lit(1)).as("n"))
-
   /** Explode-transactions (§2.11): rows → one record per row with named
     * fields resolved via the canonical header index map. */
   def explodeTransactions(df: DataFrame, tableId: Column, columns: Column, rows: Column): DataFrame =

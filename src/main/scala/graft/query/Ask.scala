@@ -1,7 +1,6 @@
 package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 import graft.index.{Embed, Rerank}
@@ -12,8 +11,9 @@ import graft.index.{Embed, Rerank}
   * search (similarity top-k with metadata filters) → keyword rerank →
   * sigmoid-normalized score → relevance threshold filter → Q&A direct-match
   * fallback → SHOW_TABLE tag resolution → sources projection. One
-  * QueryExecution; the only exchange is the top-k (TakeOrderedAndProject,
-  * no full sort).
+  * QueryExecution that runs the corpus top-k once (TakeOrderedAndProject,
+  * no full sort); tag resolution adds one scalar subquery over the table
+  * dim and no join.
   *
   * The similarity stage scores with the keyword expression by default; pass
   * `scoreFn` to score differently — e.g. `Embed.dot(col("embedding"),
@@ -74,33 +74,41 @@ object Ask {
 
   /** §3.2 step 9 — resolve `[SHOW_TABLE:CAT=x]` tags in answer strings
     * against a table-source dimension (ref `backend/main.py:128-163`,
-    * `rag.py:745-779`): extract tags with `regexp_extract_all`, first-match
-    * join (J5 shape) each distinct category against the broadcast dim, and
-    * substitute the wrapped HTML back into the answer with a fold over the
-    * per-answer substitution list. Unresolved tags are removed (main.py
-    * semantics). Answers without tags pass through untouched. */
+    * `rag.py:745-779`). The dim is reduced to one sorted array and bound
+    * to every answer row as a scalar subquery, so it must be small enough
+    * to collect (table sources per corpus, not corpus rows). Per category
+    * the lowest html wins (nulls first); categories and tags match after
+    * `trim`. Each answer folds its distinct tags, in sorted order, over
+    * the matching replacements in sorted order, substituting the wrapped
+    * HTML. Unresolved tags and null html are removed (main.py semantics).
+    * Answers without tags, null answers and rows with a null id pass
+    * through untouched; columns keep their order. One pass over
+    * `answers`: no join, window or grouping. */
   def resolveShowTableTags(answers: DataFrame, idCol: String, answerCol: String,
                            tables: DataFrame, catCol: String, htmlCol: String): DataFrame = {
     val tagPat = "\\[SHOW_TABLE:CAT=([^\\]]*)\\]"
-    // first-match per category: deterministic lowest-html row wins
-    val rn = row_number().over(Window.partitionBy(col(catCol)).orderBy(col(htmlCol)))
-    val dim = tables.withColumn("_rn", rn).filter(col("_rn") === 1)
-      .select(trim(col(catCol)).as("_cat"),
-        concat(lit("<br><div class='table-responsive'>"), col(htmlCol), lit("</div><br>")).as("_repl"))
-    // sort_array: collect_list order is nondeterministic, and if a
-    // replacement HTML ever contained a tag literal itself, fold order
-    // would change the output — sorting pins it
-    val tags = answers.select(col(idCol),
-        explode(array_distinct(regexp_extract_all(col(answerCol), lit(tagPat), lit(1)))).as("_tag"))
-      .join(broadcast(dim), trim(col("_tag")) === col("_cat"), "left")
-      .groupBy(idCol)
-      .agg(sort_array(collect_list(struct(col("_tag"), coalesce(col("_repl"), lit("")).as("_repl")))).as("_subs"))
-    answers.join(tags, Seq(idCol), "left")
-      .withColumn(answerCol,
-        when(col("_subs").isNull, col(answerCol))
-          .otherwise(aggregate(col("_subs"), col(answerCol), (acc, t) =>
-            replace(acc, concat(lit("[SHOW_TABLE:CAT="), t.getField("_tag"), lit("]")), t.getField("_repl")))))
-      .drop("_subs")
+    // sorted, so a category's entries are adjacent and its winner leads;
+    // a null category never matches a tag
+    val entries = col("_s")
+    val firsts = filter(entries, (e, i) => !get(entries, i - 1)("cat").eqNullSafe(e("cat")))
+    val dim = tables
+      .select(sort_array(collect_set(struct(col(catCol).as("cat"), col(htmlCol).as("html")))).as("_s"))
+      .select(sort_array(transform(firsts, e => struct(trim(e("cat")).as("cat"),
+        coalesce(concat(lit("<br><div class='table-responsive'>"), e("html"), lit("</div><br>")),
+          lit("")).as("repl")))))
+      .scalar()
+    // sorted tags over sorted replacements: if a replacement ever held a
+    // tag literal itself, fold order would change the output
+    val tags = array_sort(array_distinct(regexp_extract_all(col(answerCol), lit(tagPat), lit(1))))
+    val resolved = aggregate(tags, col(answerCol), (acc, t) => {
+      val hits = filter(col("_dim"), e => e("cat") === trim(t))
+      val repls = when(size(hits) > 0, hits("repl")).otherwise(array(lit("")))
+      aggregate(repls, acc, (a, r) => replace(a, concat(lit("[SHOW_TABLE:CAT="), t, lit("]")), r))
+    })
+    // a subquery may not sit inside a lambda: bind it to a column first
+    answers.withColumn("_dim", dim)
+      .withColumn(answerCol, when(col(idCol).isNull, col(answerCol)).otherwise(resolved))
+      .drop("_dim")
   }
 
   /** Sources projection (ref `rag.py:781-790`): ranked hits → presentation

@@ -60,6 +60,105 @@ class AskSkewSpec extends SparkSpec {
     assert(out(2) == "no tags here")
   }
 
+  private def wrap(html: String) = s"<br><div class='table-responsive'>$html</div><br>"
+
+  test("resolveShowTableTags edge cases: whitespace, nulls, repeats, unresolved") {
+    val answers = Seq[(java.lang.Long, String)](
+      (1L, "[SHOW_TABLE:CAT=x] and [SHOW_TABLE:CAT= x]"),  // " x" trims onto both x rows
+      (2L, "[SHOW_TABLE:CAT=n] [SHOW_TABLE:CAT=n]"),       // null html wins, repeated tag
+      (3L, "[SHOW_TABLE:CAT=nope]!"),                       // unresolved → removed
+      (4L, null),                                           // null answer
+      (null, "[SHOW_TABLE:CAT=x] untouched"),               // null id passes through
+      (5L, "[SHOW_TABLE:CAT=]"),                            // matches neither null nor " x"
+      (6L, "[SHOW_TABLE:CAT=r]")).toDF("id", "answer")      // winner's html holds a tag
+    val tables = Seq[(String, String)](
+      ("x", "<t>B</t>"), ("x", "<t>C</t>"), (" x", "<t>A</t>"),
+      ("n", null), ("n", "<t>N</t>"), (null, "<t>nullcat</t>"),
+      ("r", "[SHOW_TABLE:CAT=r]"), ("r", "{later}")).toDF("cat", "html")
+    val out = Ask.resolveShowTableTags(answers, "id", "answer", tables, "cat", "html")
+      .collect().map(r => (Option(r.get(0)).map(_.toString).orNull, r.getString(1))).toMap
+    // tags sorted (" x" < "x"), each over its replacements sorted: A then B
+    assert(out("1") == s"${wrap("<t>A</t>")} and ${wrap("<t>A</t>")}")
+    assert(out("2") == " ")
+    assert(out("3") == "!")
+    assert(out("4") == null)
+    assert(out(null) == "[SHOW_TABLE:CAT=x] untouched")
+    assert(out("5") == "")
+    // only the first match substitutes: the tag it brings in stays
+    assert(out("6") == wrap("[SHOW_TABLE:CAT=r]"))
+    assert(out.size == 7)
+  }
+
+  test("resolveShowTableTags equals a plain fold over sorted (tag, repl) substitutions") {
+    // Spark's trim strips spaces only
+    def trim(s: String) = s.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
+    val tagRe = "\\[SHOW_TABLE:CAT=([^\\]]*)\\]".r
+    val cats = Seq("a", " a", "a ", "b", "c", "", " ", null)
+    val htmls = Seq("<t>1</t>", "<t>2</t>", "<t>3</t>", null, "[SHOW_TABLE:CAT=b]", "{t}")
+    val tagNames = Seq("a", " a", "b", "c", "d", "", " ")
+    for (seed <- 1 to 3) {
+      val rng = new scala.util.Random(seed)
+      def pick[T](xs: Seq[T]): T = xs(rng.nextInt(xs.size))
+      val tables = Seq.fill(4 + rng.nextInt(10))((pick(cats), pick(htmls)))
+      val answers = (1 to 40).map { i =>
+        val text = Seq.fill(rng.nextInt(5))(
+          if (rng.nextBoolean()) s"[SHOW_TABLE:CAT=${pick(tagNames)}]" else pick(Seq("w", " ", "z"))).mkString
+        val id: java.lang.Long = if (i % 13 == 0) null else i.toLong
+        (id, if (i % 11 == 0) null else text)
+      }
+      val entries = tables.filter(_._1 != null).groupBy(_._1).toSeq.map { case (cat, rows) =>
+        val html = rows.map(_._2).minBy(h => (h != null, Option(h).getOrElse("")))
+        (trim(cat), if (html == null) "" else wrap(html))
+      }
+      val expected = answers.map { case (id, text) =>
+        val resolved = if (id == null || text == null) text else {
+          val subs = tagRe.findAllMatchIn(text).map(_.group(1)).toSeq.distinct.flatMap { tag =>
+            val hits = entries.filter(_._1 == trim(tag)).map(_._2)
+            (if (hits.isEmpty) Seq("") else hits).map(tag -> _)
+          }.sorted
+          subs.foldLeft(text) { case (acc, (tag, repl)) => acc.replace(s"[SHOW_TABLE:CAT=$tag]", repl) }
+        }
+        (id, resolved)
+      }
+      val got = Ask.resolveShowTableTags(answers.toDF("id", "answer"), "id", "answer",
+          tables.toDF("cat", "html"), "cat", "html")
+        .collect().map(r => (r.get(0).asInstanceOf[java.lang.Long], r.getString(1)))
+      val key = (p: (java.lang.Long, String)) => (String.valueOf(p._1), String.valueOf(p._2))
+      assert(got.toSeq.sortBy(key) == expected.sortBy(key), s"seed $seed")
+    }
+  }
+
+  test("one ask with tag resolution runs one corpus top-k and no join, window or nested loop") {
+    import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // shaped like one harness question: retrieve, tag each hit with its
+    // section, resolve against a corpus-derived dim, project sources
+    val corpus = graft.tables.TestTables.documents(spark, sf)
+      .select(col("doc_id").cast("string").as("uid"), col("text").as("content"), col("lang").as("section"))
+    val hits = Ask.ask(corpus, "uid", "content", "spark join stream", Ask.AskConfig(topK = 5))
+    val answers = hits.select(col("uid"), col("score"),
+      concat(substring(col("content"), 1, 120), lit(" [SHOW_TABLE:CAT="), col("section"), lit("]")).as("answer"))
+    val dim = corpus.select(col("section").as("cat"),
+      concat(lit("<table><tr><td>"), col("section"), lit("</td></tr></table>")).as("html")).distinct()
+    val out = Ask.sources(Ask.resolveShowTableTags(answers, "uid", "answer", dim, "cat", "html"), "uid", "answer")
+    val rows = out.collect()
+    assert(rows.nonEmpty && rows.forall(r => !r.getString(1).contains("[SHOW_TABLE:")))
+    def nodes(p: SparkPlan): Seq[SparkPlan] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case other => other.children
+      }
+      p +: (kids ++ p.subqueries).flatMap(nodes)
+    }
+    val all = nodes(out.queryExecution.executedPlan)
+    val topK = all.collect { case t: TakeOrderedAndProjectExec if t.limit == 15 => t }
+    assert(topK.size == 1, s"the corpus top-k must run once:\n${out.queryExecution.executedPlan}")
+    val banned = Set("SortMergeJoinExec", "WindowExec", "BroadcastNestedLoopJoinExec", "CartesianProductExec")
+    val found = all.map(_.getClass.getSimpleName).filter(banned)
+    assert(found.isEmpty, s"unexpected operators $found:\n${out.queryExecution.executedPlan}")
+  }
+
   test("qnaFallback accepts only close question matches") {
     val pairs = Seq(
       ("how do i reset the password", "use the reset link"),
